@@ -9,7 +9,8 @@ import java.nio.file.{Files, Paths}
   * bench uses, so the captured plan is the plan being timed. Note the dump is
   * the COMPILE-TIME plan (AQE `isFinalPlan=false`): the judge checks plan
   * *shape* claims (Exchange count, join strategy, pushed filters), which are
-  * all visible pre-execution.
+  * all visible pre-execution. Each graft-ocf scan of the final plan adds a
+  * line with the tasks it plans and the splits those tasks read.
   *
   * Usage: runMain graft.Explain <sfDir> <outDir> <suffix> <q1,q2,...>
   */
@@ -37,11 +38,24 @@ object Explain {
     wanted.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+        org.apache.spark.sql.execution.FormattedMode) + scanTasks(df)
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
       spark.catalog.clearCache()
       System.err.println(s"[explain] wrote $name ($suffix)")
     }
     spark.stop()
   }
+
+  /** One line per graft-ocf batch scan of the final plan: the tasks it
+    * plans and the splits they read (small splits may share a task). */
+  private def scanTasks(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan
+    }.collect { case scan: graft.sources.OcfScan =>
+      val parts = scan.planInputPartitions()
+      val splits = graft.sources.OcfPackedPartition.splitsOf(parts).size
+      s"\ngraft-ocf scan tasks: ${parts.length} over $splits splits " +
+        s"(files=${scan.files.size})"
+    }.mkString("", "", "\n")
 }

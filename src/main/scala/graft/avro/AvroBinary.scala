@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets
 
 final class AvroEofException(msg: String) extends RuntimeException(msg)
 
+/** An encode that would need a buffer larger than a JVM array can hold. */
+final class AvroCapacityException(msg: String) extends RuntimeException(msg)
+
 /** Positional binary reader over a byte array implementing the Avro wire
   * primitives: zigzag varints, little-endian IEEE floats, length-prefixed
   * bytes/strings, and type-directed skips.
@@ -107,11 +110,12 @@ final class AvroBinaryWriter(initialCapacity: Int = 64) {
   /** Copy the contents to `os` without materializing an intermediate array. */
   def writeTo(os: java.io.OutputStream): Unit = os.write(buf, 0, count)
 
+  // Long arithmetic: near 2 GB an Int `count + n` wraps negative and the
+  // bounds check would pass a write past the end of the array
   @inline private def ensure(n: Int): Unit =
-    if (count + n > buf.length) grow(n)
+    if (count.toLong + n > buf.length) grow(n)
   private def grow(n: Int): Unit =
-    buf = java.util.Arrays.copyOf(buf,
-      math.max(buf.length << 1, count + n))
+    buf = java.util.Arrays.copyOf(buf, AvroBinaryWriter.grownCapacity(buf.length, count, n))
 
   /** Ensure `n` writable bytes and return the backing array; the caller
     * fills `[position, position + n)` and then [[advance]]s. */
@@ -178,4 +182,20 @@ final class AvroBinaryWriter(initialCapacity: Int = 64) {
   }
 
   def writeString(s: String): Unit = writeBytes(s.getBytes(StandardCharsets.UTF_8))
+}
+
+object AvroBinaryWriter {
+  /** The largest byte array the JVM reliably allocates. */
+  val MaxCapacity: Int = Int.MaxValue - 8
+
+  /** The capacity to grow to when `count` bytes are held in `current` and
+    * `n` more are needed: doubling, at least the need, at most
+    * [[MaxCapacity]]. A need past [[MaxCapacity]] is a typed error. */
+  def grownCapacity(current: Int, count: Int, n: Int): Int = {
+    val need = count.toLong + n
+    if (need > MaxCapacity)
+      throw new AvroCapacityException(
+        s"Avro encode needs $need bytes in one buffer; the limit is $MaxCapacity")
+    math.min(math.max(current.toLong * 2, need), MaxCapacity.toLong).toInt
+  }
 }

@@ -8,23 +8,26 @@ import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-/** Vectorized (ColumnarBatch) reads for FLAT schemas (X91): when every
-  * reader field is a scalar Avro shape (primitives, date/time/timestamp/
-  * uuid/decimal logical types, enum, fixed; nullable unions included) and
-  * every planned file's writer schema admits a positional WIRE PLAN
-  * (below), the scan decodes straight into on-heap column vectors — one
-  * tight loop per batch instead of a per-row compiled-reader virtual call
-  * + row allocation + iterator step. Spark's `ColumnarToRow` (codegen'd)
+/** Vectorized (ColumnarBatch) reads (X91): when every reader field is a
+  * shape the lane decodes — scalar Avro shapes (primitives, date/time/
+  * timestamp/uuid/decimal logical types, enum, fixed; nullable unions
+  * included), nested records, arrays and maps (X107/X108) and general
+  * unions (X111) — and every planned file's writer schema admits a
+  * positional WIRE PLAN (below), the scan decodes straight into on-heap
+  * column vectors — one tight loop per batch instead of a per-row
+  * compiled-reader virtual call + row allocation + iterator step. Spark's `ColumnarToRow` (codegen'd)
   * consumes the batches. Partition values and the `_file` metadata column
   * are per-split CONSTANTS and ride along as [[ConstantColumnVector]]s —
   * identity/transform/bucket-partitioned tables (the normal production
   * shape) vectorize exactly like unpartitioned ones; `_pos` rides as a
   * real ordinal vector, MoR position/equality deletes apply in-lane
   * (X105), and SCHEMA EVOLUTION resolves per file (X106: aliases,
-  * reader-default constants, numeric promotions). Only NESTED shapes
-  * (and aggregate pushdowns, which have their own readers) fall back to
-  * the row reader — Avro is row-oriented, so the columnar path is a fast
-  * lane with one semantics, never a second one. */
+  * reader-default constants, numeric promotions). The row reader remains
+  * for `wrap` reads, `columnar=false`, reader shapes or files without a
+  * wire plan (e.g. a nested projection reordered against the writer), and
+  * aggregate pushdowns, which have their own readers — Avro is
+  * row-oriented, so the columnar path is a fast lane with one semantics,
+  * never a second one. */
 private[graft] object OcfColumnar {
 
   /** One flat READER field: its name, Spark type, wire primitive, and
@@ -275,7 +278,8 @@ private[graft] object OcfColumnar {
     }
   }
 
-  /** Field specs when `readerJson` is a flat all-primitive record. */
+  /** Field specs when every field of the `readerJson` record has a lane
+    * shape (see the object doc); None sends the scan to the row lane. */
   def fieldsFor(readerJson: String): Option[Array[Field]] =
     scala.util.Try(AvroSchemaParser.parse(readerJson)).toOption.flatMap {
       case rec: ARecord =>
@@ -821,8 +825,7 @@ private[graft] final class OcfColumnarSplitReader(
   private var blocksVisited = 0L
   private var bytesFetched = 0L
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(OcfScanTaskMetric("ocfBlocksRead", blocksVisited),
-      OcfScanTaskMetric("ocfBytesRead", bytesFetched))
+    OcfScanMetrics.ofSplit(blocksVisited, bytesFetched)
 
   override def next(): Boolean = {
     if (emitted >= limit) return false

@@ -1519,7 +1519,9 @@ private[sources] final class OcfScanBuilder(
   * first-block offset) lives ONCE in [[OcfReaderFactory]] — which rides the
   * stage's broadcast task binary, serialized once per stage — so a thousand
   * 64 KB splits of a file with a 100 KB avsc ship O(1) bytes each instead of
-  * ~100 KB each (~16 GB of task metadata at 10 GB/64 KB splits). */
+  * ~100 KB each (~16 GB of task metadata at 10 GB/64 KB splits). A task
+  * reads either one split or an [[OcfPackedPartition]]: a list of small
+  * splits the planner bin-packed together. */
 private[graft] sealed trait OcfSplit extends InputPartition {
   def fileIndex: Int; def start: Long; def end: Long
   /** True when `start`/`end` are EXACT block boundaries from the file's
@@ -1542,10 +1544,83 @@ private[graft] final case class OcfKeyedInputPartition(
   override def partitionKey(): InternalRow = key
 }
 
+/** Several small splits read by ONE task, one after another (Spark's
+  * `FilePartition` for this source): a table landed by many small appends
+  * would otherwise schedule a task per file and spend its time on task
+  * set-up rather than decode. Planned by [[OcfScan.pack]]; every reader
+  * factory opens it through [[OcfChainedReader]]. */
+private[graft] final case class OcfPackedPartition(splits: Array[OcfSplit])
+    extends InputPartition
+
+private[graft] object OcfPackedPartition {
+  /** Every split of a planned scan, packed or not, in plan order. */
+  def splitsOf(parts: Array[InputPartition]): Seq[OcfSplit] =
+    parts.toSeq.flatMap {
+      case p: OcfPackedPartition => p.splits.toSeq
+      case s: OcfSplit => Seq(s)
+    }
+}
+
+/** Reads an [[OcfPackedPartition]]: opens the per-split readers one after
+  * another, closing each when it runs dry, and reports the task's custom
+  * metrics as the sum over every split read so far. */
+private[sources] final class OcfChainedReader[T](
+    splits: Array[OcfSplit], open: OcfSplit => PartitionReader[T])
+    extends PartitionReader[T] {
+  private var nextSplit = 0
+  private var cur: PartitionReader[T] = _
+  // metric totals of the splits already closed
+  private val closed = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+
+  private def add(into: scala.collection.mutable.Map[String, Long],
+                  ms: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric]): Unit =
+    ms.foreach(m => into(m.name) = into.getOrElse(m.name, 0L) + m.value)
+
+  override def next(): Boolean = {
+    while (true) {
+      if (cur == null) {
+        if (nextSplit >= splits.length) return false
+        cur = open(splits(nextSplit))
+        nextSplit += 1
+      }
+      if (cur.next()) return true
+      add(closed, cur.currentMetricsValues())
+      val done = cur
+      cur = null
+      done.close()
+    }
+    false // unreachable
+  }
+
+  override def get(): T = cur.get()
+
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    val sum = closed.clone()
+    if (cur != null) add(sum, cur.currentMetricsValues())
+    sum.iterator.map { case (n, v) =>
+      OcfScanTaskMetric(n, v): org.apache.spark.sql.connector.metric.CustomTaskMetric
+    }.toArray
+  }
+
+  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
+}
+
+private[sources] object OcfChainedReader {
+  /** The reader for one planned partition: a packed partition chains its
+    * splits, a single split opens directly. */
+  def open[T](partition: InputPartition)(split: OcfSplit => PartitionReader[T]): PartitionReader[T] =
+    partition match {
+      case p: OcfPackedPartition => new OcfChainedReader(p.splits, split)
+      case s: OcfSplit => split(s)
+    }
+}
+
 /** Custom V2 metrics: per-split counters summed onto the scan node in the
   * Spark UI. `ocfBytesRead` is the bytes actually fetched (block headers +
   * bodies + sync scans) — for a pushed-down `COUNT(*)` it shows the
-  * header-walk reading ~0.1% of the file, which is the whole point. */
+  * header-walk reading ~0.1% of the file, which is the whole point.
+  * `ocfSplitsRead` counts the splits opened, so splits per task is
+  * `ocfSplitsRead` over the stage's task count. */
 private[sources] object OcfScanMetrics {
   final class BlocksRead extends org.apache.spark.sql.connector.metric.CustomSumMetric {
     override def name(): String = "ocfBlocksRead"
@@ -1555,8 +1630,19 @@ private[sources] object OcfScanMetrics {
     override def name(): String = "ocfBytesRead"
     override def description(): String = "OCF bytes fetched"
   }
+  final class SplitsRead extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+    override def name(): String = "ocfSplitsRead"
+    override def description(): String = "OCF splits read"
+  }
   def all: Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new BlocksRead, new BytesRead)
+    Array(new BlocksRead, new BytesRead, new SplitsRead)
+
+  /** One split reader's task metrics: its block and byte counters, and the
+    * one split it reads. */
+  def ofSplit(blocks: Long, bytes: Long): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(OcfScanTaskMetric("ocfBlocksRead", blocks),
+      OcfScanTaskMetric("ocfBytesRead", bytes),
+      OcfScanTaskMetric("ocfSplitsRead", 1L))
 }
 
 private[sources] final case class OcfScanTaskMetric(name: String, value: Long)
@@ -1939,7 +2025,7 @@ private[graft] final case class OcfScan(
             .map(m => m.path -> m).toMap
         }
       val keyed = keyGrouped
-      files.iterator.zipWithIndex.filter { case (f, _) => keep(f) }.flatMap { case (f, i) =>
+      val splits = files.iterator.zipWithIndex.filter { case (f, _) => keep(f) }.flatMap { case (f, i) =>
         def keyRow(f: OcfDataSource.OcfFileMeta): InternalRow = {
           val vals = new Array[Any](partIdx.length + (if (bucketN > 0) 1 else 0))
           var k = 0
@@ -1973,6 +2059,20 @@ private[graft] final case class OcfScan(
             }
         }
       }.toArray
+      // packing would break two promises made to Spark: one key per task
+      // (key grouping) and sorted tasks (a concatenation of sorted splits
+      // is not sorted; top-N pushdown rides the same stamps)
+      if (keyed || topNCols.nonEmpty || outputOrdering().nonEmpty) splits.toArray[InputPartition]
+      else org.apache.spark.sql.SparkSession.getActiveSession
+          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession) match {
+        case None => splits.toArray[InputPartition]
+        case Some(session) =>
+          val c = session.sessionState.conf
+          val minPartitions = c.filesMinPartitionNum.getOrElse(
+            c.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+              .getOrElse(session.sparkContext.defaultParallelism))
+          OcfScan.pack(splits, splitSize, c.filesOpenCostInBytes, minPartitions)
+      }
     }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -2127,6 +2227,39 @@ private[graft] final case class OcfScan(
 }
 
 private[graft] object OcfScan {
+  /** Bin-pack planned splits into tasks by Spark's own file-packing rule
+    * (`FilePartition.maxSplitBytes` + `getFilePartitions`): each split is
+    * charged its byte length plus `openCost`, the target per task is
+    * `min(splitSize, max(openCost, total / minPartitions))`, and splits
+    * are placed largest first, next-fit. Many small files thus run as about
+    * `minPartitions` tasks, while a split near `splitSize` keeps a task of
+    * its own. A task of one split stays a bare split; a packed task lists
+    * its splits in planning order. When nothing packs, the plan is
+    * returned unchanged. */
+  def pack(splits: Array[OcfSplit], splitSize: Long, openCost: Long,
+           minPartitions: Int): Array[InputPartition] = {
+    def len(i: Int): Long = splits(i).end - splits(i).start
+    val total = splits.indices.iterator.map(len(_) + openCost).sum
+    val target = math.min(splitSize, math.max(openCost, total / minPartitions))
+    val tasks = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
+    val current = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var size = 0L
+    splits.indices.sortBy(i => -len(i)).foreach { i =>
+      if (current.nonEmpty && size + len(i) > target) {
+        tasks += current.toArray
+        current.clear()
+        size = 0L
+      }
+      current += i
+      size += len(i) + openCost
+    }
+    if (current.nonEmpty) tasks += current.toArray
+    if (tasks.length == splits.length) splits.toArray[InputPartition]
+    else tasks.map(_.sorted).sortBy(_.head).map { t =>
+      if (t.length == 1) splits(t.head) else OcfPackedPartition(t.map(splits))
+    }.toArray
+  }
+
   /** Plan a block-indexed file's splits from its `graft.blockIndex` stamp:
     * block-ALIGNED byte ranges (readers anchor at the exact offset — no
     * sync scan — and stop exactly at `end`), with blocks whose stamped
@@ -2186,6 +2319,10 @@ private[graft] object OcfScan {
     }
 }
 
+/** Row and columnar readers for a planned scan. It carries the file table
+  * that every split indexes into; a task's partition is one split or an
+  * [[OcfPackedPartition]] of several, read in turn by [[OcfChainedReader]].
+  * The COUNT and aggregate factories below take the same two shapes. */
 private[sources] final case class OcfReaderFactory(
     files: IndexedSeq[OcfDataSource.OcfFileMeta], readerJson: String,
     wrap: Boolean, conf: SerializableHadoopConf, limit: Long = Long.MaxValue,
@@ -2202,8 +2339,10 @@ private[sources] final case class OcfReaderFactory(
     // tuples the reader drops
     eqDeletes: Map[Int, Seq[OcfDataSource.OcfFileMeta]] = Map.empty)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[OcfSplit]
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    OcfChainedReader.open(partition)(splitReader)
+
+  private def splitReader(p: OcfSplit): PartitionReader[InternalRow] = {
     val meta = files(p.fileIndex)
     new OcfSplitReader(meta, p.start, p.end, readerJson, wrap,
       conf.value, limit,
@@ -2220,8 +2359,11 @@ private[sources] final case class OcfReaderFactory(
     columnarFields.isDefined
 
   override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    OcfChainedReader.open(partition)(columnarSplitReader)
+
+  private def columnarSplitReader(p: OcfSplit)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[OcfSplit]
     val meta = files(p.fileIndex)
     // the per-FILE wire plan drives the decode — the driver gated the lane
     // on every planned file having one, so a miss here is a planning bug
@@ -2259,10 +2401,10 @@ private[sources] final case class OcfReaderFactory(
 private[sources] final case class OcfCountReaderFactory(
     files: IndexedSeq[OcfDataSource.OcfFileMeta], conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[OcfSplit]
-    new OcfCountReader(files(p.fileIndex), p.start, p.end, conf.value, p.aligned)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    OcfChainedReader.open(partition) { p =>
+      new OcfCountReader(files(p.fileIndex), p.start, p.end, conf.value, p.aligned)
+    }
 }
 
 private[graft] final class OcfCountReader(
@@ -2293,8 +2435,7 @@ private[graft] final class OcfCountReader(
   }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(OcfScanTaskMetric("ocfBlocksRead", blocksVisited),
-      OcfScanTaskMetric("ocfBytesRead", bytesFetched))
+    OcfScanMetrics.ofSplit(blocksVisited, bytesFetched)
 
   override def get(): InternalRow = row
   override def close(): Unit = in.close()
@@ -2309,15 +2450,15 @@ private[sources] final case class OcfAggReaderFactory(
     exprs: Array[OcfAggExpr], values: IndexedSeq[Array[Any]],
     groupCount: Int = 0)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[OcfSplit]
-    if (p.fileIndex < 0) new OcfAggConstantsReader(exprs, values)
-    else new OcfAggReader(files(p.fileIndex), p.start, p.end, conf.value,
-      // the row template is group values + agg constants; COUNT slots sit
-      // after the group prefix
-      exprs.zipWithIndex.collect { case (OcfAggExpr.Count, i) => groupCount + i },
-      values(p.fileIndex), p.aligned)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    OcfChainedReader.open(partition) { p =>
+      if (p.fileIndex < 0) new OcfAggConstantsReader(exprs, values)
+      else new OcfAggReader(files(p.fileIndex), p.start, p.end, conf.value,
+        // the row template is group values + agg constants; COUNT slots sit
+        // after the group prefix
+        exprs.zipWithIndex.collect { case (OcfAggExpr.Count, i) => groupCount + i },
+        values(p.fileIndex), p.aligned)
+    }
 }
 
 /** The min/max-only fast path: one task, one constant partial row per file,
@@ -2362,8 +2503,7 @@ private[graft] final class OcfAggReader(
   }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(OcfScanTaskMetric("ocfBlocksRead", blocksVisited),
-      OcfScanTaskMetric("ocfBytesRead", bytesFetched))
+    OcfScanMetrics.ofSplit(blocksVisited, bytesFetched)
 
   override def get(): InternalRow = row
   override def close(): Unit = if (in != null) in.close()
@@ -2743,8 +2883,7 @@ private[graft] final class OcfSplitReader(
   private var bytesFetched = 0L
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(OcfScanTaskMetric("ocfBlocksRead", blocksVisited),
-      OcfScanTaskMetric("ocfBytesRead", bytesFetched))
+    OcfScanMetrics.ofSplit(blocksVisited, bytesFetched)
 
   override def get(): InternalRow = row
   override def close(): Unit = in.close()

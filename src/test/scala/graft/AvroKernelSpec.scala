@@ -27,6 +27,18 @@ class AvroKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("writer growth computes capacity in Long and fails typed past the array limit") {
+    import AvroBinaryWriter.{MaxCapacity, grownCapacity}
+    assert(grownCapacity(64, 60, 10) == 128, "doubles")
+    assert(grownCapacity(64, 60, 1000) == 1060, "or takes the need when larger")
+    // doubling a 1 GB buffer overflows Int: clamped to the limit instead
+    assert(grownCapacity(1 << 30, 1 << 30, 1) == MaxCapacity)
+    assert(grownCapacity(MaxCapacity - 10, MaxCapacity - 10, 10) == MaxCapacity)
+    // one byte past the limit, and a need whose Int sum would wrap negative
+    intercept[AvroCapacityException](grownCapacity(MaxCapacity, MaxCapacity - 4, 5))
+    intercept[AvroCapacityException](grownCapacity(Int.MaxValue, Int.MaxValue - 1, Int.MaxValue))
+  }
+
   test("schema parse + canonical form + fingerprint") {
     val s = AvroSchemaParser.parse(userSchemaJson).asInstanceOf[ARecord]
     assert(s.fullName == "example.avro.User")

@@ -560,9 +560,10 @@ class OcfDataSourceSpec extends AnyFunSuite {
     val tailSplits = planned(tail)
     assert(tailSplits.length >= 1 && tailSplits.length < nBlocks / 2,
       s"tail query must prune most blocks; planned ${tailSplits.length} of $nBlocks")
-    val covered = tailSplits.collect {
+    val covered = graft.sources.OcfPackedPartition.splitsOf(tailSplits).map {
       case s: graft.sources.OcfInputPartition => assert(s.aligned); s.end - s.start
     }.sum
+    assert(covered > 0L, "the tail blocks must be planned")
     assert(covered < file.length() / 4,
       s"pruned splits must cover a fraction of the file: $covered of ${file.length()}")
     assert(tail.select("id").as[Long].collect().sorted.toSeq == (3900L until 4000L))
@@ -689,9 +690,10 @@ class OcfDataSourceSpec extends AnyFunSuite {
     val df = read(dir, 1 << 20).where(col("id") >= 3900L)
     val splits = scanOf(df).toBatch.planInputPartitions()
     val file = dir.listFiles.filter(f => f.isFile && f.getName.endsWith(".avro")).head
-    val covered = splits.collect {
+    val covered = graft.sources.OcfPackedPartition.splitsOf(splits).map {
       case s: graft.sources.OcfInputPartition => assert(s.aligned); s.end - s.start
     }.sum
+    assert(covered > 0L, "the tail blocks must be planned")
     assert(covered < file.length() / 4,
       s"sink-sorted blocks must prune the tail query: covered $covered of ${file.length()}")
     assert(df.select("id").as[Long].collect().sorted.toSeq == (3900L until 4000L))
@@ -1049,7 +1051,7 @@ class OcfDataSourceSpec extends AnyFunSuite {
       .asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
     val batch = scan.asInstanceOf[org.apache.spark.sql.connector.read.Batch]
     def extent(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Long =
-      parts.map { case s: graft.sources.OcfSplit => s.end - s.start }.sum
+      graft.sources.OcfPackedPartition.splitsOf(parts).map(s => s.end - s.start).sum
     val before = extent(batch.planInputPartitions())
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("id", Array[Any](10L, 3990L))))

@@ -40,10 +40,12 @@ class OcfMetricsSpec extends AnyFunSuite {
       .find(_.name == "ocfFilesWritten").get.value)
   }
 
-  test("scan-side task metrics: decode reader counts bodies, count reader stays header-only") {
-    // one file, several blocks of long datums
-    val schemaJson = """{"type":"record","name":"K","fields":[{"name":"k","type":"long"}]}"""
-    val schema = AvroSchemaParser.parse(schemaJson)
+  private val longsSchemaJson =
+    """{"type":"record","name":"K","fields":[{"name":"k","type":"long"}]}"""
+
+  /** One file of the longs 0 until 1000 in 256 B blocks (several blocks). */
+  private def longsFile(): (java.io.File, OcfDataSource.OcfFileMeta) = {
+    val schema = AvroSchemaParser.parse(longsSchemaJson)
     val f = java.io.File.createTempFile("ocf-metrics-r", ".avro")
     f.deleteOnExit()
     val fos = new java.io.FileOutputStream(f)
@@ -52,9 +54,16 @@ class OcfMetricsSpec extends AnyFunSuite {
       val b = new AvroBinaryWriter(); b.writeLong(k); sw.append(b.toByteArray)
     }
     sw.finish(); fos.close()
+    (f, OcfDataSource.fetchMetas(conf,
+      Seq(OcfDataSource.FileSlice(f.getAbsolutePath, f.length()))).head)
+  }
 
-    val meta = OcfDataSource.fetchMetas(conf,
-      Seq(OcfDataSource.FileSlice(f.getAbsolutePath, f.length()))).head
+  private def metricsOf(r: org.apache.spark.sql.connector.read.PartitionReader[_]): Map[String, Long] =
+    r.currentMetricsValues().map(x => x.name -> x.value).toMap
+
+  test("scan-side task metrics: decode reader counts bodies, count reader stays header-only") {
+    val schemaJson = longsSchemaJson
+    val (f, meta) = longsFile()
 
     val r = new OcfSplitReader(meta, 0, f.length(), schemaJson, wrap = false, conf)
     var n = 0
@@ -75,6 +84,37 @@ class OcfMetricsSpec extends AnyFunSuite {
       s"count(*) fetches ~20 B per block, never a body: $cm")
     assert(cm("ocfBytesRead") < f.length() / 10,
       s"the header walk must read a small fraction of the file: $cm vs ${f.length()}")
+  }
+
+  test("ocfSplitsRead: one per split read, summed with blocks and bytes over a packed task") {
+    val (f, meta) = longsFile()
+    val whole = new OcfSplitReader(meta, 0, f.length(), longsSchemaJson, wrap = false, conf)
+    while (whole.next()) ()
+    whole.close()
+    val wm = metricsOf(whole)
+    assert(wm("ocfSplitsRead") == 1L, s"one split, counted once, not per row: $wm")
+    val c = new OcfCountReader(meta, 0, f.length(), conf)
+    c.next(); c.close()
+    assert(metricsOf(c)("ocfSplitsRead") == 1L)
+
+    // the same file as three byte splits packed into one task: every row
+    // once, three splits, and the same blocks and bytes as the whole read
+    val third = f.length() / 3
+    val splits: Array[OcfSplit] = Array(OcfInputPartition(0, 0L, third),
+      OcfInputPartition(0, third, 2 * third), OcfInputPartition(0, 2 * third, f.length()))
+    val packed = new OcfChainedReader[org.apache.spark.sql.catalyst.InternalRow](splits,
+      s => new OcfSplitReader(meta, s.start, s.end, longsSchemaJson, wrap = false, conf))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    assert(metricsOf(packed).isEmpty, "no split opened before the first next()")
+    assert(packed.next())
+    seen += packed.get().getLong(0)
+    assert(metricsOf(packed)("ocfSplitsRead") == 1L, "the open split counts at once")
+    while (packed.next()) seen += packed.get().getLong(0)
+    packed.close()
+    assert(seen == (0L until 1000L))
+    val pm = metricsOf(packed)
+    assert(pm == Map("ocfBlocksRead" -> wm("ocfBlocksRead"),
+      "ocfBytesRead" -> wm("ocfBytesRead"), "ocfSplitsRead" -> 3L), s"$pm vs $wm")
   }
 
   test("sort tracker certifies only truly ordered streams (stamp is verified, not assumed)") {
